@@ -224,9 +224,22 @@ class MRManagerServer:
                 self.task_events.append(message)
                 self.task_event.notify_all()
         elif mtype == "shutdown":
-            self._shutdown.set()
-            self._queue.put(None)  # wake the runner
-            self._shutdown_workers()
+            self._begin_shutdown()
+
+    def _begin_shutdown(self) -> None:
+        """Stop accepting work and wake every loop that waits on a
+        socket or queue, so the server's threads end at once instead of
+        at their next poll timeout."""
+        self._shutdown.set()
+        self._queue.put(None)  # wake the runner
+        if self._hb_sock is not None:
+            # An empty datagram ends the heartbeat loop's recvfrom.
+            try:
+                with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as s:
+                    s.sendto(b"", (self.host, self.hb_port))
+            except OSError:
+                pass  # the loop still ends at its next recv timeout
+        self._shutdown_workers()
 
     def _shutdown_workers(self) -> None:
         """C6 fan-out: forward shutdown to every registered worker
@@ -247,6 +260,8 @@ class MRManagerServer:
                 continue
             except OSError:
                 break
+            if self._shutdown.is_set():
+                break  # the wake datagram from _begin_shutdown
             try:
                 message = json.loads(data.decode("utf-8"))
             except (ValueError, UnicodeDecodeError):
@@ -281,6 +296,14 @@ class MRManagerServer:
         a task error (C7). Returns finished messages in task_id order.
         Raises if the fleet empties, a task exhausts its attempts, or
         shutdown arrives — a queued job must never hang its submitter.
+
+        Exit rule: completion is re-tested right after each batch of
+        events is consumed, so the wave returns on its last accepted
+        ``finished`` event with no idle wait. The loop blocks on
+        ``task_event`` only when every queued event has been read (events
+        a synchronous sender appends while tasks are dealt are read
+        first); the 0.2 s timeout only bounds how long liveness goes
+        unchecked while tasks run.
 
         Correlation is (wave nonce AND task_id AND assigned worker): a
         straggler ``finished`` from a presumed-dead worker whose task
@@ -328,9 +351,7 @@ class MRManagerServer:
             if len(self.task_events) > 10_000:
                 del self.task_events[:-1_000]
             cursor = len(self.task_events)
-            while len(done) < len(tasks):
-                if self._shutdown.is_set():
-                    raise RuntimeError("shutdown during job dispatch")
+            while True:
                 # Consume finished events that arrived since last look.
                 while cursor < len(self.task_events):
                     ev = self.task_events[cursor]
@@ -396,6 +417,10 @@ class MRManagerServer:
                     done[tid] = ev
                     busy.discard(wkey)
                     del inflight[tid]
+                if len(done) == len(tasks):
+                    break
+                if self._shutdown.is_set():
+                    raise RuntimeError("shutdown during job dispatch")
                 # C7: requeue tasks whose worker fell out of liveness or
                 # re-registered (a fresh process never saw the task).
                 alive = {
@@ -454,7 +479,8 @@ class MRManagerServer:
                             "every live worker reported finished"
                             + legacy_remedy
                         )
-                self.task_event.wait(timeout=0.2)
+                if cursor == len(self.task_events):
+                    self.task_event.wait(timeout=0.2)
         return [done[int(t["task_id"])] for t in tasks]
 
     def _run_job_on_workers(self, message: dict, job_id: int) -> MRJobResult:
@@ -618,9 +644,15 @@ class MRManagerServer:
 
     def stop(self) -> None:
         """Local equivalent of receiving a shutdown message."""
-        self._shutdown.set()
-        self._queue.put(None)
-        self._shutdown_workers()
+        self._begin_shutdown()
+        if self._sock is not None:
+            # The accept loop is not the caller here: shutting the
+            # listening socket down ends its blocked accept() on Linux
+            # (elsewhere the loop still ends at its 0.5 s accept timeout).
+            try:
+                self._sock.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
 
     def join(self, timeout: float | None = None) -> None:
         for t in self._threads:

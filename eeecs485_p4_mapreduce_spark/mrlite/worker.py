@@ -35,7 +35,10 @@ starter stubs, so the tests ARE the spec):
   "finished", "task_id", "output_paths", "worker_host",
   "worker_port"}`` (tests/test_worker_03.py:85-101). Lines stream
   through O(1) memory while partitioning (tests/test_worker_11.py
-  profiles the map stage).
+  profiles the map stage). Keys repeat heavily, so each task memoizes
+  key → partition in a ``PartitionMemo``: at most 2048 entries (emptied
+  when full) and no key longer than 64 characters, which keeps the
+  memo under 1 MiB however many distinct keys a mapper emits.
 - **new_reduce_task** (reference: tests/test_worker_07.py:27-38 field
   set, :117-125 grouped output): merge-sort the input partition files
   lexicographically by whole ``(key, value)`` line (R1 — required:
@@ -46,7 +49,13 @@ starter stubs, so the tests ARE the spec):
   spilled to a run file, then ``heapq.merge`` streams the runs — peak
   memory is O(largest single input file), never O(partition), which is
   what lets one reduce task take a whole skewed partition at 100 TB
-  shard sizes without this shim becoming the weak link.
+  shard sizes without this shim becoming the weak link. Runs are UTF-8
+  bytes and the merge goes to a binary stdin through ``writelines``
+  (UTF-8 byte order is code-point order, so the order is a str sort's).
+  Records split at ``\n`` only, after ``\r\n`` and a lone ``\r`` are
+  read as ``\n`` (as the map side reads its mapper's stdout): ``\x0b``,
+  ``\x0c``, ``\x1c``-``\x1e``, ``\x85``, U+2028 and U+2029 stay inside
+  their record, and a final line without a newline gets one.
 - **shutdown**: stop the loops, close the sockets, exit 0
   (tests/test_worker_01.py catches SystemExit(0); here ``join()``
   returns and ``exit_code`` reads 0).
@@ -80,6 +89,36 @@ from eeecs485_p4_mapreduce_spark.mrlite.partitioner import md5_partition
 #: Seconds between heartbeats — in the reference spec
 #: (reference: tests/utils/__init__.py:21-22).
 TIME_BETWEEN_HEARTBEATS = 2.0
+
+
+class PartitionMemo:
+    """``md5_partition`` for one map task, memoized per key.
+
+    Mapper keys repeat heavily (a word count emits each word once per
+    occurrence), and the md5 + hexdigest + int parse dominates the
+    per-line cost. The memo is bounded so the map stage's streaming
+    memory envelope holds for high-cardinality keys: keys longer than
+    ``MAX_KEY_CHARS`` are never stored, and the memo is emptied when it
+    reaches ``MAX_ENTRIES`` (the hot keys come straight back). At worst,
+    2048 keys of 64 four-byte code points, it holds about 0.7 MiB.
+    """
+
+    MAX_ENTRIES = 2048
+    MAX_KEY_CHARS = 64
+
+    def __init__(self, num_partitions: int):
+        self.num_partitions = num_partitions
+        self.cache: dict[str, int] = {}
+
+    def __call__(self, key: str) -> int:
+        part = self.cache.get(key)
+        if part is None:
+            part = md5_partition(key, self.num_partitions)
+            if len(key) <= self.MAX_KEY_CHARS:
+                if len(self.cache) >= self.MAX_ENTRIES:
+                    self.cache.clear()
+                self.cache[key] = part
+        return part
 
 
 def send_json(
@@ -291,6 +330,7 @@ class MRWorker:
         executable = str(message["executable"])
         out_dir = Path(str(message["output_directory"]))
         num_partitions = int(message["num_partitions"])
+        partition_of = PartitionMemo(num_partitions)
         part_paths = [
             out_dir / f"maptask{task_id:05d}-part{p:05d}"
             for p in range(num_partitions)
@@ -338,9 +378,7 @@ class MRWorker:
                             if not line.endswith("\n"):
                                 line += "\n"
                             key = line.partition("\t")[0]
-                            parts[
-                                md5_partition(key, num_partitions)
-                            ].write(line)
+                            parts[partition_of(key)].write(line)
                     if proc.returncode:
                         raise RuntimeError(
                             f"mapper exited {proc.returncode} on {input_path}"
@@ -372,42 +410,42 @@ class MRWorker:
             # External merge-sort: one sorted run per (unsorted) input
             # file, spilled to disk, then a streaming k-way merge. Peak
             # memory = the largest single input file, not the partition.
+            # Runs hold UTF-8 bytes: UTF-8 byte order is code-point
+            # order, so the sort matches a str sort without a text layer.
             runs = []
             for p in message["input_paths"]:
-                lines = (
-                    Path(str(p))
-                    .read_text(encoding="utf-8")
-                    .splitlines(keepends=True)
-                )
+                data = Path(str(p)).read_bytes()
+                data.decode("utf-8")  # a non-UTF-8 input fails the task
+                if b"\r" in data:
+                    # Universal newlines, as the map side reads its
+                    # mapper's stdout: \r\n and a lone \r end a record.
+                    data = data.replace(b"\r\n", b"\n").replace(b"\r", b"\n")
+                # Records end at \n only (bytes.splitlines would also
+                # split at \r, but none is left): \x0b, \x0c, \x1c-\x1e,
+                # \x85 and U+2028/U+2029 stay inside their record.
+                lines = data.splitlines(keepends=True)
                 # A mapper whose final line lacks its newline must not
                 # concatenate two records in the merged stream (and a
                 # bare line sorts differently from its terminated twin).
-                if lines and not lines[-1].endswith("\n"):
-                    lines[-1] += "\n"
+                if lines and not lines[-1].endswith(b"\n"):
+                    lines[-1] += b"\n"
                 lines.sort()
-                run = stack.enter_context(
-                    tempfile.TemporaryFile("w+", encoding="utf-8")
-                )
+                run = stack.enter_context(tempfile.TemporaryFile("w+b"))
                 run.writelines(lines)
                 run.seek(0)
                 runs.append(run)
             stack.callback(tmp_path.unlink, missing_ok=True)
-            outfile = stack.enter_context(tmp_path.open("w", encoding="utf-8"))
+            outfile = stack.enter_context(tmp_path.open("wb"))
             proc = stack.enter_context(
                 subprocess.Popen(
-                    [executable],
-                    stdin=subprocess.PIPE,
-                    stdout=outfile,
-                    text=True,
+                    [executable], stdin=subprocess.PIPE, stdout=outfile
                 )
             )
             assert proc.stdin is not None
-            for line in heapq.merge(*runs):  # streaming k-way merge
-                proc.stdin.write(line)
+            proc.stdin.writelines(heapq.merge(*runs))  # streaming k-way merge
             proc.stdin.close()
             if proc.wait():
                 raise RuntimeError(f"reducer exited {proc.returncode}")
-            outfile.flush()
             os.replace(tmp_path, out_path)
         self._send_finished(
             task_id, [str(out_path)], wave=message.get("wave")

@@ -18,7 +18,7 @@ import pytest
 REF = Path("/root/reference")
 REF_DATA = REF / "tests/testdata"
 
-pytestmark = pytest.mark.skipif(
+needs_ref = pytest.mark.skipif(
     not REF_DATA.is_dir(), reason="reference testdata not available"
 )
 
@@ -50,6 +50,7 @@ def _wait_jobs(server, n: int, timeout: float = 120.0) -> None:
     raise TimeoutError(f"jobs not finished: {[(r.error, r.result) for r in server.jobs]}")
 
 
+@needs_ref
 def test_reference_submit_client_runs_wc_job(server, tmp_path):
     """Drive the endpoint with the reference's actual mapreduce-submit
     client: its fire-and-forget TCP JSON message must produce the golden
@@ -80,6 +81,7 @@ def test_reference_submit_client_runs_wc_job(server, tmp_path):
     assert sorted(rec.result.read_lines()) == sorted(golden)
 
 
+@needs_ref
 def test_fifo_queueing_and_malformed_messages(server, tmp_path):
     """Two jobs submitted back-to-back run FIFO with increasing job ids
     (reference tests/test_manager_05/06 queue behavior); malformed JSON
@@ -146,6 +148,7 @@ def test_shutdown_drains_queued_jobs(server):
     assert rec.error == "dropped: shutdown"
 
 
+@needs_ref
 def test_cli_serve_mode(tmp_path):
     """`python -m ...mrlite --serve` starts the endpoint, accepts the
     reference protocol, and exits cleanly on the shutdown message."""
@@ -192,6 +195,7 @@ def test_cli_serve_mode(tmp_path):
             proc.kill()
 
 
+@needs_ref
 def test_dead_fleet_falls_back_to_spark_engine(spark, tmp_path):
     """Routing rule: workers execute jobs only while heartbeat-ALIVE.
     A worker that registered and then died (no heartbeats for 5
